@@ -33,11 +33,6 @@ def stub_entity_id_col(norm_surface: Column) -> Column:
     return F.concat(F.lit("ent:"), F.substring(F.sha2(norm_surface, 256), 1, 16))
 
 
-def edge_id_col(subj: Column, pred: Column, obj: Column) -> Column:
-    """Stable edge identity (analog of datalog.go:292,316 edge IDs)."""
-    return F.sha2(F.concat_ws("|", subj, pred, obj), 256)
-
-
 def minhash_band_cols(norm_surface: Column, *, bands: int | None = None,
                       rows: int | None = None) -> list[Column]:
     """MinHash band signatures over character 3-gram shingles — pure built-ins.
@@ -333,16 +328,3 @@ def hash_str(s: str) -> int:
         h ^= ch
         h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
     return h
-
-
-def cosine_sim_col(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<float> columns via higher-order fns —
-    JVM-side, no UDF (used by similarity search baselines)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))

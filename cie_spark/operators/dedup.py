@@ -346,7 +346,7 @@ def minhash_signatures(
 
 
 def minhash_candidates(
-    docs: DataFrame, *, max_bucket: int = 64, _release: list | None = None,
+    docs: DataFrame, *, max_bucket: int = 64,
     base: DataFrame | None = None, **kw
 ) -> DataFrame:
     """Candidate near-dup pairs (a < b) sharing >= 1 LSH band.
@@ -365,8 +365,7 @@ def minhash_candidates(
     the census + two join sides at one exchange; this removes the join and
     its ~4 s of shuffle/scheduling at sf1.0 outright — guide §2.4 "remove
     shuffles outright"). `count(*)` (not size(collect_list)) preserves the
-    old census semantics for NULL doc_ids. `_release` is kept for caller
-    compatibility (nothing to release)."""
+    old census semantics for NULL doc_ids."""
     sig = minhash_signatures(docs, base=base, **kw)
     buckets = (
         sig.groupBy("band_idx", "band_sig")
@@ -419,7 +418,11 @@ def ngram_jaccard_pairs(
     ~|shingles|²/2^64; equality with the string-based DuckDB oracle twin is
     re-verified at every driver SF). The join-backs move long arrays, not
     string arrays (guide §2.3), and the candidate side is small enough that
-    AQE turns both verify joins into broadcast joins."""
+    AQE turns both verify joins into broadcast joins.
+
+    Not lazy: constructing the DataFrame runs bounded driver jobs — the
+    candidate-pair fetch (at most LOCAL_VERIFY_MAX_PAIRS + 1 rows) and,
+    while that fits, the shingle-hash fetch of the candidate docs."""
     kw.setdefault("rows", 4 if threshold >= 0.7 else 2)
     spark = docs.sparkSession
     from pyspark.sql import types as T2
@@ -468,10 +471,10 @@ def ngram_jaccard_pairs(
         # (bounded: ≤ 2×|pairs| docs; byte budget re-checked on the result)
         # and compute the exact Jaccard in-process — set semantics match
         # array_intersect/union, int/int division matches the JVM Divide,
-        # HALF_UP rounding matches F.round (the simsearch local-tier
-        # contract). Duplicate doc_ids break the dict mirror (the join
-        # fans a pair out across every hs row per id) — yield to the join
-        # path instead, like simsearch's local tier does.
+        # HALF_UP rounding matches F.round. Duplicate doc_ids break the
+        # dict mirror (the join fans a pair out across every hs row per
+        # id) — yield to the join path instead, like simsearch's matrix
+        # tier does.
         hs_rows = hashed_shingle_base(
             docs.join(F.broadcast(ids), on="doc_id", how="left_semi"),
             shingle_words,

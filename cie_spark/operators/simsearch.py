@@ -54,7 +54,7 @@ def topk_bruteforce(
 def _pack_signatures(M: np.ndarray, P: np.ndarray) -> np.ndarray:
     """Sign-bit signatures for a batch: bit i = (row . plane_i) >= 0, packed
     into int64. THE single definition of the signature bit layout — the two
-    pandas UDFs and the driver-local tier all call this, so their
+    pandas UDFs and the matrix tier all call this, so their
     bit-identity holds by construction (not by parallel-edit discipline).
     M: batch × dim float64; P: dim × n_planes float64."""
     n_planes = P.shape[1]
@@ -99,17 +99,20 @@ def _hyperplane_sig_auto(vec: Column, n_planes: int, seed: int) -> Column:
     make_planes_from_df needed to learn the dimension. That probe was one of
     ~6 fixed-overhead stages that made `cosine_near_dup_pairs` cost 6.9 s on
     2,000 vectors (r4 verdict wrong #2); plane regeneration per executor is
-    a few µs of seeded RNG."""
+    a few µs of seeded RNG. A NULL vector gets a NULL signature (it can
+    never verify, so it must not fail the batch); a ragged batch raises."""
 
     @F.pandas_udf(T.LongType())
     def sig(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series(np.zeros(0, dtype=np.int64))
-        M = np.array(list(vecs), dtype=np.float64)
-        P = np.asarray(
-            make_planes(M.shape[1], n_planes, seed), dtype=np.float64
-        ).T
-        return pd.Series(_pack_signatures(M, P))
+        ok = vecs.notna().to_numpy()
+        out = pd.Series(pd.array([None] * len(vecs), dtype="Int64"))
+        if ok.any():
+            M = np.array(list(vecs[ok]), dtype=np.float64)
+            P = np.asarray(
+                make_planes(M.shape[1], n_planes, seed), dtype=np.float64
+            ).T
+            out[ok] = _pack_signatures(M, P)
+        return out
 
     return sig(vec)
 
@@ -204,151 +207,62 @@ def topk_ivf(
     )
 
 
-# Input size (vectors) at or below which cosine_near_dup_pairs runs
-# driver-locally: a bounded ids-only count probe, a bounded vector fetch,
-# then the identical banded blocking + exact verify as numpy over the
-# collected matrix, returning a LocalRelation. At this size the distributed plan is ~6 stages of
-# scheduling (persist, posexplode, window census, self-join, two
-# join-backs, eager checkpoint) for ~1 ms of math — measured 3.3 s for
-# 2,000 vectors at sf0.1. Above the cap the distributed tier is unchanged
-# (the 100-TB shape). 8,192 rows × dim ≤ ~1.5k is ≤ ~100 MB of Arrow —
-# driver-bounded. Same tiering pattern as link.link_rows_local;
-# bit-agreement is pinned by
-# tests/test_simsearch.py::test_near_dup_local_tier_agrees_with_distributed.
-LOCAL_MAX_VECTORS = 8_192
-
-# Matrix-size budget (bytes, float64) for the broadcast-verify middle tier
-# of cosine_near_dup_pairs: above LOCAL_MAX_VECTORS but while the id->vector
-# matrix still fits comfortably on the driver and in every Python worker,
-# candidates are generated distributed (banded buckets) and VERIFIED against
-# a broadcast numpy matrix — candidate pairs cross the Python boundary as
-# ids only (16 bytes/pair), never as two 64-float vectors. At sf1.0
-# (20k × 64-dim, 7.5M candidate pairs) this replaced a 6 s candidate-dedup
-# shuffle + 12 s of join-backs + interpreted higher-order cosine with a
-# ~1 s matmul verify (guide §8: "decide with small rows, move big rows
-# once" — here the big rows never move at all). 64 MB at dim 64 caps the
-# tier at ~131k vectors; per-worker footprint is matrix + id index
-# (~75 MB). Above the cap (or on duplicate ids / ragged vectors) the
-# join-back tier below is the unchanged 100-TB shape. Override via the
-# CIE_NEAR_DUP_BROADCAST_MB env (0 disables the tier).
-BROADCAST_MAX_BYTES = int(
-    float(__import__("os").environ.get("CIE_NEAR_DUP_BROADCAST_MB", "64"))
-    * 1024 * 1024
-)
+# Matrix-size budget (bytes, float64) for the matrix tier of
+# cosine_near_dup_pairs: while the id->vector matrix fits comfortably on the
+# driver and in every Python worker, the operator fetches (id, vec) ONCE as
+# Arrow, bands the signatures on the driver with numpy and verifies the
+# kept buckets' row-index lists in mapInPandas against the broadcast
+# matrix — candidate pairs never cross the Python boundary, and `vectors`
+# is never evaluated again after the fetch (so the verify cannot index a
+# different snapshot of the input than the one it banded). 64 MB at dim 64
+# caps the tier at ~131k vectors; per-worker footprint is the matrix plus
+# its ids and norms (~55 MB). Above the cap (or on duplicate ids,
+# ragged/NULL vectors) the join-back tier is the unchanged 100-TB shape.
+# Tests set it to 0 to pin the join-back tier.
+BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 BROADCAST_MAX_ROWS = 1 << 19
 
 
-def _round_half_up4(x: float) -> float:
-    """Mirror of Spark's round(col, 4) on doubles: BigDecimal.valueOf
-    (shortest decimal repr — same contract as Python's repr) then
-    HALF_UP. Python's built-in round() is banker's rounding and would
-    diverge on exact .5 ties."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.0001"), ROUND_HALF_UP)
-    )
-
-
-def _near_dup_pairs_local(
-    spark, ids, M: np.ndarray, threshold: float, id_type,
-    n_planes: int, bands: int, seed: int, max_bucket: int,
-) -> DataFrame:
-    """Driver-local rendering of the banded near-dup plan below. Bit-level
-    mirror of the distributed tier: the signature matmul is the SAME numpy
-    code as `_hyperplane_sig_auto`; band split is arithmetic-shift+mask
-    (numpy int64 >> == JVM shiftright); bucket cap, id-ordered pairing and
-    HALF_UP rounding all match. The only permitted divergence is float
-    summation order in the verify dot product (numpy pairwise vs the JVM
-    sequential fold) — invisible at 4 rounded decimals away from ties,
-    and pinned on seeded data by the agreement test."""
-    from pyspark.sql import types as T2
-
-    schema = T2.StructType(
-        [
-            T2.StructField("id_a", id_type),
-            T2.StructField("id_b", id_type),
-            T2.StructField("sim", T2.DoubleType()),
-        ]
-    )
-    if M.size == 0:
-        return spark.createDataFrame([], schema)
-    P = np.asarray(make_planes(M.shape[1], n_planes, seed), dtype=np.float64).T
-    sig = _pack_signatures(M, P)
-
+def _band_buckets(
+    sig: np.ndarray, rank: np.ndarray, valid: np.ndarray,
+    n_planes: int, bands: int, max_bucket: int,
+) -> list[np.ndarray]:
+    """Row-index lists of the band buckets that can pair: for each band,
+    rows sorted by (band value, id rank) and split where the value changes.
+    A bucket over `max_bucket` rows is dropped (hot-bucket guard); rows
+    with a NULL id (`valid` False) count toward that size but never pair,
+    like the join-back tier's count(*) census over collect_list. Members
+    come out ordered by id value, so triu's i < j is id_a < id_b."""
     bits = n_planes // bands
     mask = np.int64((1 << bits) - 1)
-    cand: set = set()
+    out = []
     for b in range(bands):
         vals = (sig >> np.int64(bits * b)) & mask
-        buckets: dict = {}
-        for idx in range(len(ids)):
-            buckets.setdefault(int(vals[idx]), []).append(idx)
-        for members in buckets.values():
-            if len(members) > max_bucket or len(members) < 2:
-                continue
-            for i in range(len(members)):
-                for j in range(i + 1, len(members)):
-                    x, y = members[i], members[j]
-                    # pair ordered by id VALUE (not row position) — the
-                    # distributed join filters x.id < y.id, which is never
-                    # true against a NULL id (the row still occupied its
-                    # band bucket above, also like the distributed census)
-                    ia, ib = ids[x], ids[y]
-                    if ia is None or ib is None:
-                        continue
-                    if ia < ib:
-                        cand.add((x, y))
-                    elif ib < ia:
-                        cand.add((y, x))
-
-    norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-    out = []
-    for x, y in cand:
-        na, nb = norms[x], norms[y]
-        s = float(M[x] @ M[y] / (na * nb)) if na > 0 and nb > 0 else 0.0
-        if s >= threshold:
-            out.append((ids[x], ids[y], _round_half_up4(s)))
-    out.sort()
-    return spark.createDataFrame(out, schema)
+        order = np.lexsort((rank, vals))
+        starts = np.flatnonzero(np.diff(vals[order], prepend=-1))
+        sizes = np.diff(starts, append=len(order))
+        kept = (sizes >= 2) & (sizes <= max_bucket)
+        for s, m in zip(starts[kept], sizes[kept]):
+            members = order[s:s + m]
+            members = members[valid[members]]
+            if len(members) >= 2:
+                out.append(members)
+    return out
 
 
-def _bc_bucket_verify_gen(bc, threshold: float):
-    """mapInPandas generator over per-bucket member-id ARRAYS: pair
-    expansion (triu over the value-sorted members — the same a<b pairs the
-    JVM two-step explode would generate) AND the exact-cosine verify both
-    happen in numpy, so Arrow moves one row per bucket (~1 MB at sf1.0)
-    instead of one row per candidate pair (7.5M rows / ~120 MB). Caller
-    guarantees members are unique non-null ids (the tier's precondition),
-    so triu's i<j is exactly id_a < id_b."""
+def _bucket_verify_gen(bc, threshold: float):
+    """mapInPandas generator over bucket ROW-INDEX lists: pair expansion
+    (triu over the id-ordered members) AND the exact cosine both run in
+    numpy against the broadcast (ids, M, norms), so Arrow moves one row per
+    bucket instead of one row per candidate pair."""
 
     def gen(batches):
-        idx, M, norms = bc.value
-        skey = srow = None
-        if idx:
-            karr = np.array(list(idx.keys()))
-            if np.issubdtype(karr.dtype, np.number):
-                order = np.argsort(karr)
-                skey = karr[order]
-                srow = np.fromiter(
-                    (idx[k] for k in karr[order].tolist()),
-                    dtype=np.int64,
-                    count=len(order),
-                )
+        ids, M, norms = bc.value
         for pdf in batches:
             outs = []
-            for members in pdf["_ids"]:
-                m = len(members)
-                if m < 2:
-                    continue
-                arr = np.asarray(members)
-                if skey is not None:
-                    rows = srow[np.searchsorted(skey, arr)]
-                else:
-                    rows = np.fromiter(
-                        (idx[v] for v in members), dtype=np.int64, count=m
-                    )
-                iu, ju = np.triu_indices(m, k=1)
+            for members in pdf["_rows"]:
+                rows = np.asarray(members, dtype=np.int64)
+                iu, ju = np.triu_indices(len(rows), k=1)
                 ra, rb = rows[iu], rows[ju]
                 dots = np.einsum("ij,ij->i", M[ra], M[rb])
                 na, nb = norms[ra], norms[rb]
@@ -359,8 +273,8 @@ def _bc_bucket_verify_gen(bc, threshold: float):
                     outs.append(
                         pd.DataFrame(
                             {
-                                "id_a": arr[iu[keep]],
-                                "id_b": arr[ju[keep]],
+                                "id_a": ids[ra[keep]],
+                                "id_b": ids[rb[keep]],
                                 "sim": sim[keep],
                             }
                         )
@@ -371,12 +285,90 @@ def _bc_bucket_verify_gen(bc, threshold: float):
     return gen
 
 
+def _near_dup_pairs_matrix(
+    vectors: DataFrame, threshold: float, id_col: str, vec_col: str,
+    n_planes: int, bands: int, seed: int, max_bucket: int, dim: int,
+) -> DataFrame | None:
+    """The matrix tier, or None when the fetched input does not qualify:
+    a `dim`-wide float64 matrix over BROADCAST_MAX_BYTES (or rows over
+    BROADCAST_MAX_ROWS), duplicate non-null ids, or a NULL, NULL-element or
+    not-`dim`-long vector."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows_cap = min(BROADCAST_MAX_BYTES // (dim * 8), BROADCAST_MAX_ROWS)
+    if not rows_cap:
+        return None
+    # Arrow fetch (Spark 4 toArrow): type-exact (ids stay int64 with NULLs
+    # as None — none of toPandas' nullable-int degradation), and the
+    # re-applied limit keeps an input that grew since the dim probe from
+    # turning into an unbounded driver collect
+    tbl = vectors.select(id_col, vec_col).limit(rows_cap + 1).toArrow()
+    n = tbl.num_rows
+    if n > rows_cap:
+        return None
+    id_arr = tbl.column(0).combine_chunks()
+    vec_arr = tbl.column(1).combine_chunks()
+    n_valid = n - id_arr.null_count
+    if pc.count_distinct(id_arr).as_py() != n_valid or vec_arr.null_count:
+        return None
+    flat = vec_arr.flatten()
+    if flat.null_count or not pc.all(
+        pc.equal(pc.list_value_length(vec_arr), dim)
+    ).as_py():
+        return None
+
+    M = flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, dim)
+    P = np.asarray(make_planes(dim, n_planes, seed), dtype=np.float64).T
+    rank = np.empty(n, dtype=np.int64)
+    rank[pc.sort_indices(id_arr).to_numpy()] = np.arange(n)
+    valid = ~id_arr.is_null().to_numpy(zero_copy_only=False)
+    buckets = _band_buckets(
+        _pack_signatures(M, P), rank, valid, n_planes, bands, max_bucket
+    )
+
+    # NULL ids never reach the output; fill them so the id array converts
+    # to a plain numpy array of the column's type
+    if n_valid and n_valid < n:
+        id_arr = id_arr.fill_null(id_arr.drop_null()[0])
+    ids = id_arr.to_numpy(zero_copy_only=False)
+    norms = np.sqrt(np.einsum("ij,ij->i", M, M))
+    spark = vectors.sparkSession
+    bc = spark.sparkContext.broadcast((ids, M, norms))
+    offsets = np.cumsum([0] + [len(m) for m in buckets], dtype=np.int32)
+    members = np.concatenate(buckets) if buckets else np.zeros(0)
+    rows = spark.createDataFrame(
+        pa.table(
+            {
+                "_rows": pa.ListArray.from_arrays(
+                    offsets, members.astype(np.int32)
+                )
+            }
+        )
+    )
+    id_type = vectors.schema[id_col].dataType
+    out_schema = T.StructType(
+        [
+            T.StructField("id_a", id_type),
+            T.StructField("id_b", id_type),
+            T.StructField("sim", T.DoubleType()),
+        ]
+    )
+    # duplicates across bands are verified redundantly rather than deduped
+    # before the verify; the dedup runs on the (tiny) surviving pairs, where
+    # duplicate rows carry identical sims
+    return (
+        rows.mapInPandas(_bucket_verify_gen(bc, threshold), out_schema)
+        .select("id_a", "id_b", F.round("sim", 4).alias("sim"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
 def cosine_near_dup_pairs(
     vectors: DataFrame, threshold: float = 0.95,
     id_col: str = "vec_id", vec_col: str = "embedding",
     n_planes: int = 64, bands: int = 8, seed: int = 42,
-    max_bucket: int = 512, local_max: int = LOCAL_MAX_VECTORS,
-    broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
+    max_bucket: int = 512,
 ) -> DataFrame:
     """Embedding near-dup pairs (a<b, cosine >= threshold) via BANDED
     hyperplane-signature blocking + exact verify — never an all-pairs cross
@@ -396,117 +388,38 @@ def cosine_near_dup_pairs(
     a different operating point (e.g. the exact-twin-checkable driver
     query at threshold 0.5) pass n_planes/bands explicitly.
 
-    Candidates = pairs agreeing on >= 1 band (equi-join per band, the same
-    blocking shape as dedup.simhash_pairs); buckets larger than `max_bucket`
-    are dropped before the self-join (hot-bucket quadratic guard — the skew
-    salting analog; recall trade documented). Verification is the exact
-    cosine, so precision is 1.0 by construction.
-    """
-    # Size probes for the driver-local and broadcast-verify tiers: ids-first
-    # and bounded (a column-pruned CollectLimit — for a scan input it
-    # short-circuits at the first files; for a shuffle-derived input it
-    # costs at most one upstream pass but moves only id bytes, never the
-    # ~100 MB of vectors an over-cap fetch would have discarded). ONE ids
-    # probe at the larger cap serves both tier decisions (round 6: the
-    # separate local probe was a fourth driver job). Pass local_max=0 /
-    # broadcast_max_bytes=0 to pin the distributed tiers (plan tests, A/B).
-    bc = None
-    rows_cap = 0
-    if broadcast_max_bytes:
-        first = vectors.select(vec_col).limit(1).collect()
-        dim = len(first[0][0]) if first and first[0][0] is not None else 0
-        rows_cap = (
-            min(broadcast_max_bytes // (dim * 8), BROADCAST_MAX_ROWS)
-            if dim
-            else 0
-        )
-    probe_cap = max(local_max, rows_cap)
-    n_probe = (
-        len(vectors.select(id_col).limit(probe_cap + 1).collect())
-        if probe_cap
-        else probe_cap
-    )
-    if local_max and n_probe <= local_max:
-        # collect(), not toPandas(): pandas degrades a nullable int64
-        # id column to float64, corrupting ids. The fetch re-applies the
-        # limit: an input whose evaluation is nondeterministic (or grew
-        # between the two jobs) must not turn this into an unbounded
-        # driver collect — an over-cap fetch falls through to the
-        # distributed tier instead.
-        head = (
-            vectors.select(id_col, vec_col).limit(local_max + 1).collect()
-        )
-        ids = [r[0] for r in head]
-        # duplicate id VALUES break the mirror (the distributed plan
-        # dedups candidate id-pairs then fans back out across every
-        # vector row per id; the local pairing is row-based) — yield to
-        # the distributed tier rather than diverge
-        if len(head) <= local_max and len(set(ids)) == len(ids):
-            M = (
-                np.array([r[1] for r in head], dtype=np.float64)
-                if head
-                else np.zeros((0, 0))
-            )
-            return _near_dup_pairs_local(
-                vectors.sparkSession, ids, M, threshold,
-                vectors.schema[id_col].dataType,
-                n_planes, bands, seed, max_bucket,
-            )
+    Candidates = pairs agreeing on >= 1 band (the same blocking shape as
+    dedup.simhash_pairs); buckets larger than `max_bucket` are dropped
+    before pairing (hot-bucket quadratic guard — the skew salting analog;
+    recall trade documented). Verification is the exact cosine, so
+    precision is 1.0 by construction.
 
-    # middle tier (round 6): distributed banded candidates + broadcast-matrix
-    # verify. Any irregularity (over cap, duplicate non-null ids,
-    # ragged/NULL vectors) falls through to the join-back tier, which
-    # remains the 100-TB shape.
-    if rows_cap and n_probe <= rows_cap:
-        # Arrow fetch (Spark 4 toArrow): ~3x faster than the row-path
-        # collect for a 10 MB matrix, and type-exact (ids stay int64 with
-        # NULLs as None — none of toPandas' nullable-int degradation). A
-        # ragged or NULL vector makes the reshape throw, which falls
-        # through to the join-back tier like the old object-array path.
-        tbl = vectors.select(id_col, vec_col).limit(rows_cap + 1).toArrow()
-        ids = tbl.column(0).to_pylist()
-        nn = [i for i in ids if i is not None]
-        if tbl.num_rows <= rows_cap and len(set(nn)) == len(nn):
-            try:
-                flat = (
-                    tbl.column(1)
-                    .combine_chunks()
-                    .flatten()
-                    .to_numpy(zero_copy_only=False)
-                )
-                M = (
-                    flat.astype(np.float64).reshape(len(ids), -1)
-                    if len(ids)
-                    else np.zeros((0, 0))
-                )
-                norms = (
-                    np.sqrt(np.einsum("ij,ij->i", M, M))
-                    if M.size
-                    else np.zeros(0)
-                )
-                idx = {v: i for i, v in enumerate(ids) if v is not None}
-                bc = vectors.sparkSession.sparkContext.broadcast(
-                    (idx, M, norms)
-                )
-            except (TypeError, ValueError):
-                bc = None
+    Not lazy: constructing the DataFrame runs bounded driver jobs — a
+    one-row dimension probe and, while the matrix fits BROADCAST_MAX_BYTES,
+    one (id, vec) fetch of at most the row cap + 1 rows. The returned plan
+    of that matrix tier reads only the driver-built bucket lists, never
+    `vectors` again.
+    """
+    first = vectors.select(vec_col).limit(1).collect()
+    dim = len(first[0][0]) if first and first[0][0] is not None else 0
+    if dim:
+        out = _near_dup_pairs_matrix(
+            vectors, threshold, id_col, vec_col,
+            n_planes, bands, seed, max_bucket, dim,
+        )
+        if out is not None:
+            return out
+
+    # join-back tier (the 100-TB shape). Candidate generation: ONE
+    # aggregation per band bucket collects the value-sorted member ids and
+    # expands pairs in-row — a single exchange of (band, id) rows, and the
+    # pandas-UDF signature subtree is consumed exactly once. count(*) (not
+    # size(collect_list)) keeps the census semantics for NULL ids: they
+    # occupy their buckets but never pair (collect_list drops them).
+    from cie_spark.operators.dedup import _pair_expand
 
     bits = n_planes // bands
     mask = (1 << bits) - 1
-    # Candidate generation (round-6 shape, shared by both distributed
-    # tiers): ONE aggregation per band bucket collects the value-sorted
-    # member ids and expands pairs in-row — replacing the r5 census
-    # groupBy + left-semi + band self-join (3 logical passes over the
-    # exploded signatures) with a single exchange of (band, id) rows. The
-    # pandas-UDF signature subtree is consumed exactly once, so the persist
-    # + eager localCheckpoint that protected it from double evaluation
-    # across the self-join sides are gone with the join itself (guide §2.4
-    # "remove shuffles outright"). count(*) (not size(collect_list))
-    # preserves the census semantics for NULL ids: they occupy their
-    # buckets but never pair (collect_list drops them, mirroring the old
-    # null-rejecting x.id < y.id join predicate).
-    from cie_spark.operators.dedup import _pair_expand
-
     sig = vectors.select(
         F.col(id_col),
         _hyperplane_sig_auto(F.col(vec_col), n_planes, seed).alias("sig"),
@@ -530,41 +443,14 @@ def cosine_near_dup_pairs(
         )
         .filter(F.col("_n") <= max_bucket)
     )
-
-    if bc is not None:
-        # Broadcast-matrix verify, fed whole BUCKETS: pair expansion and the
-        # exact cosine both run in numpy against the broadcast matrix (same
-        # float64 math as the local tier), so Arrow moves one row per band
-        # bucket instead of one per candidate pair. Duplicates across bands
-        # are verified redundantly (~5% extra at the sf1.0 operating point)
-        # in exchange for skipping the pre-verify dedup shuffle of the full
-        # candidate set — the dedup runs after the threshold filter, on the
-        # (tiny) surviving pairs, where duplicate rows carry identical sims.
-        id_type = vectors.schema[id_col].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("id_a", id_type),
-                T.StructField("id_b", id_type),
-                T.StructField("sim", T.DoubleType()),
-            ]
-        )
-        return (
-            buckets.select("_ids")
-            .mapInPandas(_bc_bucket_verify_gen(bc, threshold), out_schema)
-            .select("id_a", "id_b", F.round("sim", 4).alias("sim"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-
     raw_pairs = _pair_expand(buckets, "_ids", "id_a", "id_b")
 
-    # join-back tier (the 100-TB shape): candidate pairs stay ids-ONLY
-    # through the dedup shuffle; vectors join back only for the verify
-    # (dragging both 64-float vectors through dropDuplicates measured 3x
-    # wall on the sf0.1 bench) — the same ids-then-payload shape as
-    # dedup.ngram_jaccard_pairs. The verify reads the vector table again
-    # rather than caching it: at scale a full-corpus persist is memory
-    # pressure, and the signature subtree no longer needs cache protection
-    # (it is consumed exactly once by the candidate aggregation).
+    # Candidate pairs stay ids-ONLY through the dedup shuffle; vectors join
+    # back only for the verify (dragging both 64-float vectors through
+    # dropDuplicates measured 3x wall on the sf0.1 bench) — the same
+    # ids-then-payload shape as dedup.ngram_jaccard_pairs. The verify reads
+    # the vector table again rather than caching it: at scale a full-corpus
+    # persist is memory pressure.
     cand = raw_pairs.dropDuplicates(["id_a", "id_b"])
     vecs = vectors.select(F.col(id_col), F.col(vec_col))
     return (

@@ -583,11 +583,7 @@ class KGPipeline:
         # 3. link (+ 4. canon on the small distinct-surface link map)
         started = _now()
         ents = mentions.filter(F.col("kind") == "entity")
-        linkmap = self._link_with_dictionary(ents.select("surface"))
-        if not linkmap.isLocal():
-            # a driver-local link map is a LocalRelation — caching it only
-            # adds a plan-normalization round-trip (profiled ~0.24 s/call)
-            linkmap = linkmap.cache()
+        linkmap = self._link_with_dictionary(ents.select("surface")).cache()
         linked_ents = ents.join(
             F.broadcast(linkmap.select("surface", "entity_id", "link_tier")),
             on="surface", how="left",

@@ -46,16 +46,6 @@ MENTIONS_WITH_HASH = T.StructType(
     ]
 )
 
-# vertex table (analog of cie_function/cie_type, schema.go:194-252)
-ENTITIES = T.StructType(
-    [
-        T.StructField("entity_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # agent|tool|entity|conv
-        T.StructField("canonical_name", T.StringType(), False),
-        T.StructField("surfaces", T.ArrayType(T.StringType()), True),
-    ]
-)
-
 # edge table (analog of cie_calls/cie_defines/cie_implements,
 # schema.go:220-289); stable edge identity (subj,pred,obj,conv_id,turn_idx)
 TRIPLES = T.StructType(
@@ -84,9 +74,4 @@ LINEAGE = T.StructType(
         T.StructField("finished", T.TimestampType(), True),
         T.StructField("snapshot_id", T.StringType(), True),
     ]
-)
-
-MENTIONS_DDL = (
-    "conv_id string, turn_idx int, kind string, surface string, "
-    "tier string, pos int"
 )

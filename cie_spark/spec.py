@@ -65,14 +65,13 @@ import hashlib
 import re
 
 # --------------------------------------------------------------------------
-# regexes (compiled once; the SQL renderings below must stay in sync)
+# regexes (compiled once; the SQL rendering below must stay in sync)
 # --------------------------------------------------------------------------
 
 TOOL_CALL_RE = re.compile(r"calling tool <([A-Za-z_][A-Za-z0-9_-]*)>")
 MARKER_RE = re.compile(r"\[\[([^\]]+)\]\]")
 
-# SQL-dialect renderings of the same patterns (DuckDB + Spark SQL compatible)
-TOOL_CALL_SQL_PATTERN = r"calling tool <([A-Za-z_][A-Za-z0-9_-]*)>"
+# SQL-dialect rendering of MARKER_RE (DuckDB + Spark SQL compatible)
 MARKER_SQL_PATTERN = r"\[\[([^\]]+)\]\]"
 
 # fuzzy-link threshold on 3-gram Jaccard

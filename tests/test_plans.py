@@ -39,10 +39,7 @@ def test_dedup_candidates_never_cartesian(spark):
         [(i, f"some shared words plus unique token {i}") for i in range(30)],
         "doc_id long, text string",
     )
-    release: list = []  # lazy form — the public path checkpoints eagerly
-    plan = _physical(dedup.minhash_candidates(docs, _release=release))
-    for f in release:
-        f.unpersist()
+    plan = _physical(dedup.minhash_candidates(docs))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # the self-join is keyed on the band signature
@@ -87,6 +84,24 @@ def test_ann_lsh_filter_is_mapside(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qvec = list(emb.first()["embedding"])
     plan = _physical(simsearch.topk_lsh(emb, qvec, k=5))
+    assert "Join" not in plan
+
+
+def test_near_dup_matrix_tier_never_rescans_vectors(spark, tmp_path):
+    """The matrix tier verifies against the one (id, vec) snapshot it
+    fetched: its plan is the driver-built bucket lists feeding the
+    numpy verify, with no scan of `vectors` left to re-evaluate."""
+    from cie_spark.operators import simsearch
+
+    rows = [(i, [float((i * 7 + j) % 11) for j in range(8)]) for i in range(40)]
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(
+        str(tmp_path / "vecs")
+    )
+    emb = spark.read.parquet(str(tmp_path / "vecs"))
+    plan = _physical(simsearch.cosine_near_dup_pairs(emb, threshold=0.9))
+    assert "LocalTableScan" in plan
+    assert "MapInPandas" in plan
+    assert "FileScan" not in plan and "BatchScan" not in plan
     assert "Join" not in plan
 
 

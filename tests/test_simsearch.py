@@ -72,7 +72,7 @@ def test_ivf_topk(spark, emb):
     assert full_probe == brute
 
 
-def test_near_dup_banded_recall_on_planted_pairs(spark):
+def test_near_dup_banded_recall_on_planted_pairs(spark, monkeypatch):
     """Plant known near-duplicate vectors (tiny perturbations of shared
     bases) among random noise: the banded candidate join must recover >= 90%
     of the exact-oracle pairs at threshold 0.9 — the recall guarantee the
@@ -99,25 +99,23 @@ def test_near_dup_banded_recall_on_planted_pairs(spark):
         for r in simsearch.cosine_near_dup_exact(df, threshold=0.9).collect()
     }
     assert len(exact) >= 50  # the planted pairs are really there
+    monkeypatch.setattr(simsearch, "BROADCAST_MAX_BYTES", 0)  # join-back tier
     banded = {
         (r.id_a, r.id_b)
-        for r in simsearch.cosine_near_dup_pairs(
-            df, threshold=0.9, local_max=0  # pin the DISTRIBUTED tier
-        ).collect()
+        for r in simsearch.cosine_near_dup_pairs(df, threshold=0.9).collect()
     }
     assert banded <= exact  # exact verify => precision 1.0
     recall = len(banded & exact) / len(exact)
     assert recall >= 0.9, f"banded recall {recall:.2f} < 0.9"
 
 
-def test_near_dup_local_tier_agrees_with_distributed(spark):
-    """The driver-local small-input tier (default below LOCAL_MAX_VECTORS)
-    must return the identical pair set AND identical rounded sims as the
-    distributed banded plan — planted near-dups, noise, a zero vector and
-    a hot exact-dup cluster all included. Any divergence in the signature
-    matmul, band split, bucket cap, id ordering or rounding shows here."""
+_AGREE_KW = dict(threshold=0.9, n_planes=64, bands=8, seed=42, max_bucket=16)
+
+
+def _agreement_rows(dim: int = 24):
+    """Planted near-dups, noise, a zero vector, a NULL id riding a planted
+    base and a 20-member exact-dup cluster larger than max_bucket=16."""
     rng = np.random.default_rng(11)
-    dim = 24
     rows = []
     vid = 0
     for _ in range(12):  # planted near-dup clusters
@@ -132,38 +130,78 @@ def test_near_dup_local_tier_agrees_with_distributed(spark):
     rows.append((vid, [0.0] * dim))  # zero vector -> sim defined as 0.0
     vid += 1
     # a NULL id riding a planted base: it must pair with NOTHING in both
-    # tiers (the distributed x.id < y.id is never true against NULL) while
+    # tiers (the join-back x.id < y.id is never true against NULL) while
     # still occupying its band buckets
     rows.append((None, [float(x) for x in rows[0][1]]))
     hot = [float(x) for x in rng.standard_normal(dim)]
     for _ in range(20):  # exact-dup cluster LARGER than max_bucket: its
         rows.append((vid, list(hot)))  # band buckets (>= 20 members) must be
         vid += 1  # dropped by BOTH tiers — exercises the over-cap drop path
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    return rows
 
-    hot_start = vid - 20
-    kw = dict(threshold=0.9, n_planes=64, bands=8, seed=42, max_bucket=16)
-    local = sorted(
-        (r.id_a, r.id_b, r.sim)
-        for r in simsearch.cosine_near_dup_pairs(df, **kw).collect()
-    )
-    # tier 2: distributed candidates + broadcast-matrix verify
-    mid = sorted(
-        (r.id_a, r.id_b, r.sim)
-        for r in simsearch.cosine_near_dup_pairs(df, local_max=0, **kw).collect()
-    )
-    # tier 3: join-back verify (the 100-TB shape)
-    dist = sorted(
-        (r.id_a, r.id_b, r.sim)
-        for r in simsearch.cosine_near_dup_pairs(
-            df, local_max=0, broadcast_max_bytes=0, **kw
-        ).collect()
-    )
-    assert local, "agreement test must compare non-empty results"
+
+def _both_tiers(monkeypatch, df):
+    """(default-path pairs, join-back-pinned pairs), each sorted."""
+    def run():
+        return sorted(
+            (r.id_a, r.id_b, r.sim)
+            for r in simsearch.cosine_near_dup_pairs(df, **_AGREE_KW).collect()
+        )
+
+    default = run()
+    with monkeypatch.context() as m:
+        m.setattr(simsearch, "BROADCAST_MAX_BYTES", 0)
+        joined = run()
+    return default, joined
+
+
+def test_near_dup_matrix_tier_agrees_with_join_back(spark, monkeypatch):
+    """The matrix tier (default while the matrix fits BROADCAST_MAX_BYTES)
+    must return the identical pair set AND identical rounded sims as the
+    join-back tier. Any divergence in the signature matmul, band split,
+    bucket cap, NULL-id census, id ordering or rounding shows here."""
+    rows = _agreement_rows()
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    hot_start = rows[-1][0] - 19
+    matrix, joined = _both_tiers(monkeypatch, df)
+    assert matrix, "agreement test must compare non-empty results"
     # the over-cap drop really engaged: the 20-member exact-dup cluster's
     # buckets exceed max_bucket in every band, so neither tier pairs them
-    assert not any(a >= hot_start and b >= hot_start for a, b, _ in local)
-    assert local == mid == dist
+    assert not any(a >= hot_start and b >= hot_start for a, b, _ in matrix)
+    assert matrix == joined
+
+
+def test_near_dup_irregular_inputs_fall_through_to_join_back(spark, monkeypatch):
+    """Duplicate non-null ids, a NULL vector or a ragged vector make the
+    matrix tier decline; the operator then returns the join-back result."""
+    rows = _agreement_rows()
+    schema = "vec_id int, embedding array<float>"
+    dup = rows + [(rows[0][0], rows[1][1])]  # id 0 twice, different vectors
+    null_vec = rows[:60] + [(999, None)] + rows[60:]
+    ragged = rows + [(999, rows[0][1][:-1])]
+    args = ("vec_id", "embedding", 64, 8, 42, 16, 24)
+    for bad in (dup, null_vec, ragged):
+        df = spark.createDataFrame(bad, schema)
+        assert simsearch._near_dup_pairs_matrix(df, 0.9, *args) is None
+    results = {}
+    for name, bad in (("dup", dup), ("null_vec", null_vec)):
+        default, joined = _both_tiers(
+            monkeypatch, spark.createDataFrame(bad, schema)
+        )
+        assert default and default == joined
+        results[name] = default
+    # the duplicate id pairs through each of its rows in the join-back tier
+    assert [p for p in results["dup"] if p[:2] == (0, 1)] == [
+        (0, 1, 0.9995), (0, 1, 1.0)
+    ]
+    # a NULL vector never pairs and leaves every other pair as it was
+    matrix, _ = _both_tiers(monkeypatch, spark.createDataFrame(rows, schema))
+    assert results["null_vec"] == matrix
+    # a ragged vector fails the join-back signature UDF loudly
+    with pytest.raises(Exception):
+        simsearch.cosine_near_dup_pairs(
+            spark.createDataFrame(ragged, schema), **_AGREE_KW
+        ).collect()
 
 
 def test_hyperplane_sig_auto_matches_explicit_planes(spark):
@@ -193,18 +231,13 @@ def test_hyperplane_sig_auto_matches_explicit_planes(spark):
     assert a == b
 
 
-def test_cosine_near_dup_pairs_no_dimension_probe_job(spark):
-    """The round-5 overhead diet kept two of its three cuts here (the
-    third — removing the signature persist — was reverted by measurement;
-    round 6 then removed the persist for real by making the signature
-    subtree single-consumer). This pins the surviving cut: the SIGNATURE
-    planes derive from (seed, dim) inside the UDF, so the plane definition
-    never needs the old make_planes_from_df `.first()` probe. (The round-6
-    broadcast-verify tier makes its own deliberate, bounded size probes —
-    dim + ids — before choosing a tier; that is a measured gate, not a
-    plane-definition dependency.) Bit-identity of the auto-derived planes
-    is pinned separately above; here we pin that the operator still
-    returns the exact verified pairs."""
+def test_cosine_near_dup_pairs_no_dimension_probe_job(spark, monkeypatch):
+    """The join-back tier's SIGNATURE planes derive from (seed, dim) inside
+    the UDF, so the plane definition never needs the old make_planes_from_df
+    `.first()` probe. (The operator's one-row dim probe only sizes the
+    matrix tier; it is not a plane-definition dependency.) Bit-identity of
+    the auto-derived planes is pinned separately above; here we pin that
+    the join-back tier still returns the exact verified pairs."""
     import numpy as np
 
     rng = np.random.default_rng(5)
@@ -215,8 +248,7 @@ def test_cosine_near_dup_pairs_no_dimension_probe_job(spark):
         (i, [float(x) for x in rng.standard_normal(8)]) for i in range(2, 22)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    monkeypatch.setattr(simsearch, "BROADCAST_MAX_BYTES", 0)  # join-back tier
     got = {(r.id_a, r.id_b) for r in
-           simsearch.cosine_near_dup_pairs(
-               df, threshold=0.99, local_max=0  # pin the DISTRIBUTED tier
-           ).collect()}
+           simsearch.cosine_near_dup_pairs(df, threshold=0.99).collect()}
     assert (0, 1) in got
