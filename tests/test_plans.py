@@ -205,3 +205,24 @@ def test_dedup_no_exchange_before_signature_on_well_partitioned_input(spark):
     assert _physical(dedup._maybe_repartition(narrow, 4)).count(
         "Exchange"
     ) == _physical(narrow).count("Exchange") + 1
+
+
+def test_local_frame_keeps_ddl_types(spark):
+    """Driver-held rows become an Arrow-built LocalRelation typed exactly
+    by the DDL — for zero rows and NULLs as well — instead of an RDD scan
+    that costs a Python job per action."""
+    import datetime
+
+    from cie_spark import schema
+
+    ddl = "a bigint, b int, s string, t timestamp, x double"
+    want = spark.createDataFrame([], ddl).schema
+    empty = schema.local_frame(spark, [], ddl)
+    assert empty.isLocal() and empty.schema == want and empty.count() == 0
+    ts = datetime.datetime(2024, 5, 1, 12, 30, tzinfo=datetime.timezone.utc)
+    rows = [(1, 2, "x", ts, 0.5), (None, None, None, None, None)]
+    df = schema.local_frame(spark, rows, ddl)
+    assert df.isLocal() and df.schema == want
+    assert df.collect() == spark.createDataFrame(rows, ddl).collect()
+    lineage = schema.local_frame(spark, [], schema.LINEAGE)
+    assert lineage.schema == schema.LINEAGE
